@@ -66,9 +66,11 @@ final case class IterationResult[M](
   * rebuilt on Spark primitives:
   *
   *   - worker compute  ≙ `rdd.mapPartitions` (one result per partition);
-  *   - combinable path ≙ `treeReduce` (executor-side partial merge — the
-  *     reference's eager combiner, NettyMasterCoordinator.java:157-236, plus
-  *     tree levels it never had);
+  *   - combinable path ≙ one directly-run job whose per-partition results
+  *     the driver folds in partition order, while Spark's tree rule would add
+  *     no intermediate level (≤ 5 partitions); `treeReduce` above that
+  *     (executor-side partial merges — the reference's eager combiner,
+  *     NettyMasterCoordinator.java:157-236, plus tree levels it never had);
   *   - master→worker broadcast ≙ `sparkContext.broadcast` per iteration
   *     (replaces ZooKeeper znode chunking, BasicCoordinator.java:304-346);
   *   - barrier ≙ the Spark stage boundary; straggler handling is the
@@ -80,11 +82,11 @@ final case class IterationResult[M](
   *     restart (AbstractMasterCoordinator.java:194-238 semantics).
   *
   * Scale notes (100 TB / 1000 executors): the only data movement per
-  * iteration is |partitions| worker results to the driver (tree-combined when
-  * a combiner exists, so driver receives O(1) results of size |W|) and one
-  * broadcast of M back out (BitTorrent-style torrent broadcast, no 1 MB znode
-  * chunking limit). The input is scanned from cluster-local cache
-  * (MEMORY_AND_DISK), never reshuffled across iterations.
+  * iteration is |partitions| worker results to the driver (tree-combined above
+  * 5 partitions when a combiner exists, so the driver receives O(1) results
+  * of size |W|) and one broadcast of M back out (BitTorrent-style torrent
+  * broadcast, no 1 MB znode chunking limit). The input is scanned from
+  * cluster-local cache (MEMORY_AND_DISK), never reshuffled across iterations.
   */
 object Iterate {
 
@@ -95,6 +97,22 @@ object Iterate {
     * (BasicCoordinator.java:649-658: ratio applies only when workers > 10).
     */
   val SmallWorkerCount = 10
+
+  /** Depth of the combinable path's `treeReduce`. */
+  private val TreeDepth = 2
+
+  /** True when `treeReduce(_, TreeDepth)` over `numParts` partitions would
+    * add no intermediate level — Spark's `treeAggregate` rule: with
+    * `scale = max(ceil(numParts^(1/depth)), 2)` a level is added only while
+    * `numParts > scale + ceil(numParts / scale)`, i.e. above 5 partitions at
+    * depth 2. Such a round moves the same data as one plain job, so it runs
+    * as one: no per-call closure cleaning of the tree's nested closures, and
+    * a fold in partition order instead of task completion order.
+    */
+  private[core] def flatRound(numParts: Int): Boolean = {
+    val scale = math.max(math.ceil(math.pow(numParts, 1.0 / TreeDepth)).toInt, 2)
+    numParts <= scale + math.ceil(numParts.toDouble / scale)
+  }
 
   /** @param workerTimeout per-iteration worker compute budget — the
     *   reference's `@ComputableMonitor` (ComputableMonitor.java:50-74).
@@ -136,7 +154,6 @@ object Iterate {
       combine: Option[(W, W) => W] = None,
       listeners: Seq[IterationListener[M]] = Nil,
       checkpointDir: Option[String] = None,
-      treeDepth: Int = 2,
       workerTimeout: Option[scala.concurrent.duration.FiniteDuration] = None,
       workerTimeoutSoft: Boolean = true,
       minWorkersRatio: Double = 1.0,
@@ -253,9 +270,19 @@ object Iterate {
               quorumIteration(sc, cached, partCompute, master, combine, bc.value,
                 ctx, numParts, effectiveRatio, minWorkersTimeout)
             } else {
-              val workerResults: RDD[W] =
-                cached.mapPartitions(p => partCompute(p).iterator)
+              def workerResults: RDD[W] = cached.mapPartitions(p => partCompute(p).iterator)
+              // Only soft timeouts can drop a partition's result.
+              def allDropped = new IllegalStateException(
+                "no worker results this iteration (all partitions timed out?)")
               combine match {
+                case Some(c) if flatRound(numParts) =>
+                  // Flat combinable round: one job, results folded on the
+                  // driver in partition-index order, so the fold (and a
+                  // non-commutative combiner's result) is independent of
+                  // which task finishes first.
+                  val reduced = sc.runJob(cached, partCompute).flatten
+                    .reduceLeftOption(c).getOrElse(throw allDropped)
+                  master.compute(Iterator.single(reduced), bc.value, ctx)
                 case Some(c) =>
                   // Combinable path: partial merges run on executors and at
                   // intermediate tree levels, so the driver folds O(1) results
@@ -263,7 +290,7 @@ object Iterate {
                   // the kernel safe at 10^5 partitions where collect() would
                   // not be.
                   val reduced =
-                    try workerResults.treeReduce(c, treeDepth)
+                    try workerResults.treeReduce(c, TreeDepth)
                     catch {
                       // Empty result RDD is only possible when soft timeouts
                       // dropped every partition; without them, let user-code
@@ -271,8 +298,7 @@ object Iterate {
                       // unchanged.
                       case _: UnsupportedOperationException
                           if workerTimeout.isDefined && workerTimeoutSoft =>
-                        throw new IllegalStateException(
-                          "no worker results this iteration (all partitions timed out?)")
+                        throw allDropped
                     }
                   master.compute(Iterator.single(reduced), bc.value, ctx)
                 case None =>
@@ -315,10 +341,11 @@ object Iterate {
     *
     * With a combiner, the waiting driver thread drains arrivals into one
     * running accumulator (arrival order — the combiner must be
-    * associative+commutative, the same contract treeReduce imposes), so
-    * steady-state driver memory is O(|W|); the result handler itself only
-    * enqueues — Spark invokes it on the DAG scheduler's event loop, where
-    * user combine code would stall all job scheduling on the context.
+    * associative+commutative, the contract treeReduce imposes above the flat
+    * threshold), so steady-state driver memory is O(|W|); the result handler
+    * itself only enqueues — Spark invokes it on the DAG scheduler's event
+    * loop, where user combine code would stall all job scheduling on the
+    * context.
     * Without a combiner, the per-partition buffer is |W| × partitions — the
     * documented non-combinable bound.
     *

@@ -32,8 +32,8 @@ object IterativeSum {
       workerResults.sum
   }
 
-  /** Run the loop; combine is `+` so worker results tree-reduce on executors
-    * (the reference's Combinable path, io/Combinable.java:24-31).
+  /** Run the loop; combine is `+`, so worker results take the kernel's
+    * combinable path (the reference's Combinable path, io/Combinable.java:24-31).
     */
   def run(
       data: Dataset[Long],

@@ -68,7 +68,9 @@ object NeuralNet {
 
   private def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
 
-  /** Forward pass; returns per-layer activations (a(0) = input). */
+  /** Forward pass; returns per-layer activations (a(0) = input). With
+    * [[backprop]], the reference arithmetic that [[Kernel]] reproduces.
+    */
   private[operators] def forward(layers: Layers, w: Array[Double], x: Array[Double])
       : Array[Array[Double]] = {
     val acts = new Array[Array[Double]](layers.sizes.length)
@@ -151,11 +153,126 @@ object NeuralNet {
   def isTrain(splitKey: Long): Boolean =
     ((splitKey * 2654435761L + 1013904223L) % 1000003L) % 2 == 0
 
+  /** Per-`compute` training kernel: the arithmetic of [[forward]] and
+    * [[backprop]], bit for bit, without their per-sample allocations.
+    * Activation and delta buffers are allocated once, and each layer's
+    * weights are also kept transposed (`wt(l)(i * out + j)` = weight of
+    * input `i` into unit `j`), so the forward pass runs `out` independent
+    * accumulations over contiguous memory while every unit still sums in the
+    * reference order — bias first, then inputs `0 until in`. The backward
+    * pass keeps the reference order too (`nextDelta(i)` sums over units
+    * `0 until out`) and skips the input layer's `nextDelta`, which the
+    * reference computes and never reads. Not thread-safe: one per partition.
+    */
+  private[operators] final class Kernel(layers: Layers, w: Array[Double]) {
+    private val sizes = layers.sizes.toArray
+    private val L = sizes.length - 1
+    private val offs = sizes.sliding(2).map { case Array(in, out) => (in + 1) * out }
+      .scanLeft(0)(_ + _).toArray
+    private val wt = Array.tabulate(L) { l =>
+      val (in, out) = (sizes(l), sizes(l + 1))
+      val t = new Array[Double](in * out)
+      var j = 0
+      while (j < out) {
+        var i = 0
+        while (i < in) { t(i * out + j) = w(offs(l) + j * (in + 1) + i); i += 1 }
+        j += 1
+      }
+      t
+    }
+    // acts(0) is the current sample's features; deltas(l) is dE/dz of layer l's
+    // units (deltas(0), the input layer's, is never computed).
+    private val acts = Array.tabulate(L + 1)(l => if (l == 0) null else new Array[Double](sizes(l)))
+    private val deltas = Array.tabulate(L + 1)(l => if (l == 0) null else new Array[Double](sizes(l)))
+
+    /** Fills `acts` for `x`; returns the output activations. */
+    private def forwardInto(x: Array[Double]): Array[Double] = {
+      acts(0) = x
+      var l = 0
+      while (l < L) {
+        val in = sizes(l)
+        val out = sizes(l + 1)
+        val prev = acts(l)
+        val z = acts(l + 1)
+        val t = wt(l)
+        var j = 0
+        while (j < out) { z(j) = w(offs(l) + j * (in + 1) + in); j += 1 } // bias
+        var i = 0
+        while (i < in) {
+          val a = prev(i)
+          val row = i * out
+          j = 0
+          while (j < out) { z(j) += t(row + j) * a; j += 1 }
+          i += 1
+        }
+        j = 0
+        while (j < out) { z(j) = sigmoid(z(j)); j += 1 }
+        l += 1
+      }
+      acts(L)
+    }
+
+    /** Half squared error of the network on `s`, as the test rows count it. */
+    def error(s: Sample): Double = {
+      val out = forwardInto(s.features)
+      var e = 0.0
+      var j = 0
+      while (j < out.length) { val d = out(j) - s.label; e += d * d / 2; j += 1 }
+      e
+    }
+
+    /** [[backprop]]: accumulates `s`'s gradient into `grad`, returns its error. */
+    def backprop(s: Sample, grad: Array[Double]): Double = {
+      val out = forwardInto(s.features)
+      var delta = deltas(L)
+      var err = 0.0
+      var j = 0
+      while (j < out.length) {
+        val e = out(j) - s.label
+        err += e * e / 2
+        delta(j) = e * out(j) * (1 - out(j))
+        j += 1
+      }
+      var l = L - 1
+      while (l >= 0) {
+        val in = sizes(l)
+        val outN = sizes(l + 1)
+        val prev = acts(l)
+        var jj = 0
+        while (jj < outN) {
+          val rowOff = offs(l) + jj * (in + 1)
+          val d = delta(jj)
+          var i = 0
+          while (i < in) { grad(rowOff + i) += d * prev(i); i += 1 }
+          grad(rowOff + in) += d // bias
+          jj += 1
+        }
+        if (l > 0) {
+          val next = deltas(l)
+          val t = wt(l)
+          var i = 0
+          while (i < in) {
+            val row = i * outN
+            var nd = 0.0
+            jj = 0
+            while (jj < outN) { nd += delta(jj) * t(row + jj); jj += 1 }
+            next(i) = nd * (prev(i) * (1 - prev(i)))
+            i += 1
+          }
+          delta = next
+        }
+        l -= 1
+      }
+      err
+    }
+  }
+
   final class Worker(layers: Layers) extends WorkerComputable[Sample, NNState, NNGrad] {
     def compute(records: Iterator[Sample], last: Option[NNState],
         ctx: IterationContext): NNGrad = last match {
       case None => NNGrad(Array.empty, 0.0, 0.0, 0L, 0L)
       case Some(st) =>
+        val kernel = new Kernel(layers, st.weights)
         val grad = new Array[Double](st.weights.length)
         var trainErr = 0.0
         var testErr = 0.0
@@ -164,14 +281,10 @@ object NeuralNet {
         while (records.hasNext) {
           val s = records.next()
           if (isTrain(s.splitKey)) {
-            trainErr += backprop(layers, st.weights, s, grad)
+            trainErr += kernel.backprop(s, grad)
             nTrain += 1
           } else {
-            val out = forward(layers, st.weights, s.features).last
-            var e = 0.0
-            var j = 0
-            while (j < out.length) { val d = out(j) - s.label; e += d * d / 2; j += 1 }
-            testErr += e
+            testErr += kernel.error(s)
             nTest += 1
           }
         }

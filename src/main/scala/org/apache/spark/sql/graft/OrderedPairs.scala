@@ -79,8 +79,18 @@ object OrderedPairs {
   private val emptyArr: ArrayData = new GenericArrayData(Array.empty[Any])
   def empty(): ArrayData = emptyArr
 
+  /** Largest id list [[compute]] accepts. The callers cap lists at their
+    * `maxDf` of 50 ids; this hard guard sits far above that and far below
+    * 46 342, where the pair count `n * (n - 1) / 2` overflows `Int`. At
+    * 4 096 ids one list already yields about 8.4 million pairs.
+    */
+  val MaxElements = 4096
+
   def compute(in: ArrayData): ArrayData = {
     val n = in.numElements()
+    require(n <= MaxElements,
+      s"ordered_pairs: $n ids in one list exceed the $MaxElements-id cap " +
+        "(quadratic pair output); cap the list first, as the maxDf filter does")
     if (n < 2) return emptyArr
     val ids = in.toLongArray()
     java.util.Arrays.sort(ids)

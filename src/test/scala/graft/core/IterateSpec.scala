@@ -13,13 +13,16 @@ class IterateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def sumFixture = {
+  private def sumFixture: org.apache.spark.sql.Dataset[Long] = sumFixture(2)
+
+  private def sumFixture(partitions: Int) = {
     // The reference's sum fixture semantics: 2 splits totalling 15
     // (guagua-examples/src/test/resources/sum/{a,b}.txt); partition count is
-    // pinned to 2 because the recurrence is partition-count sensitive.
+    // pinned (2 unless a test says otherwise) because the recurrence is
+    // partition-count sensitive.
     spark.read.textFile(getClass.getResource("/sum").getPath)
       .map(_.trim.toLong)
-      .repartition(2)
+      .repartition(partitions)
   }
 
   test("golden: reference SumTest value 15345 after 10 iterations (SumTest.java:64-65)") {
@@ -58,15 +61,45 @@ class IterateSpec extends AnyFunSuite {
   }
 
   test("combinable and non-combinable paths agree") {
-    val data = sumFixture
-    val worker = new IterativeSum.SumWorker
-    val master = new IterativeSum.SumMaster
-    val combined = Iterate.run[Long, Long, Long](
-      data, worker, master, maxIterations = 5, combine = Some(_ + _))
-    val collected = Iterate.run[Long, Long, Long](
-      data, worker, master, maxIterations = 5, combine = None)
-    assert(combined.master == collected.master)
-    assert(combined.master == IterativeSum.closedForm(15, 2, 5))
+    // 2 and 4 partitions take the flat combinable round, 16 the tree.
+    assert(Iterate.flatRound(4) && !Iterate.flatRound(16))
+    for (parts <- Seq(2, 4, 16)) {
+      val data = sumFixture(parts)
+      val worker = new IterativeSum.SumWorker
+      val master = new IterativeSum.SumMaster
+      val combined = Iterate.run[Long, Long, Long](
+        data, worker, master, maxIterations = 5, combine = Some(_ + _))
+      val collected = Iterate.run[Long, Long, Long](
+        data, worker, master, maxIterations = 5, combine = None)
+      assert(combined.master == collected.master, s"$parts partitions")
+      assert(combined.master == IterativeSum.closedForm(15, parts, 5), s"$parts partitions")
+    }
+  }
+
+  test("flat combinable round folds partitions in index order, not completion order") {
+    // A non-commutative combiner (list concatenation) exposes the fold order.
+    // Lower partitions finish last, so a completion-order fold would reverse.
+    val data = spark.range(0, 40, 1, 4).as[Long].persist()
+    val worker = new WorkerComputable[Long, Vector[Int], Vector[Int]] {
+      def compute(records: Iterator[Long], last: Option[Vector[Int]],
+          ctx: IterationContext): Vector[Int] = {
+        val part = org.apache.spark.TaskContext.getPartitionId()
+        Thread.sleep(10L * (3 - part))
+        Vector(part)
+      }
+    }
+    val master = new MasterComputable[Vector[Int], Vector[Int]] {
+      def compute(ws: Iterator[Vector[Int]], last: Option[Vector[Int]],
+          ctx: IterationContext): Vector[Int] = ws.toVector.flatten
+    }
+    try {
+      assert(Iterate.flatRound(data.rdd.getNumPartitions))
+      for (run <- 1 to 20) {
+        val r = Iterate.run[Long, Vector[Int], Vector[Int]](
+          data, worker, master, maxIterations = 1, combine = Some(_ ++ _))
+        assert(r.master == Vector(0, 1, 2, 3), s"run $run")
+      }
+    } finally data.unpersist()
   }
 
   test("listeners fire per iteration in order; onComplete sees final state") {

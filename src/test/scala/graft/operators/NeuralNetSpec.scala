@@ -5,6 +5,7 @@ import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.core.IterationContext
 import graft.operators.NeuralNet._
 
 class NeuralNetSpec extends AnyFunSuite {
@@ -173,5 +174,36 @@ class NeuralNetSpec extends AnyFunSuite {
     // Both errors finite and populated — test error computed on held-out rows.
     assert(r.master.trainError > 0 && r.master.trainError < 0.5)
     assert(r.master.testError > 0 && r.master.testError < 0.5)
+  }
+
+  test("worker kernel equals a fold of the reference backprop/forward, bit for bit") {
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    for (sizes <- Seq(Seq(100, 10, 1), Seq(7, 5, 4, 2))) {
+      val layers = Layers(sizes)
+      val rnd = new Random(sizes.sum)
+      val w = Array.fill(layers.nWeights)(rnd.nextGaussian() * 0.3)
+      val samples = (0 until 300).map { i =>
+        Sample(Array.fill(sizes.head)(rnd.nextDouble() * 2 - 1),
+          if (rnd.nextBoolean()) 1.0 else 0.0, rnd.nextLong())
+      }
+      val got = new Worker(layers).compute(samples.iterator, Some(NNState(w, 0.0, 0.0)),
+        IterationContext(2, 2, "spec"))
+
+      val grad = new Array[Double](w.length)
+      var (trainErr, testErr, nTrain, nTest) = (0.0, 0.0, 0L, 0L)
+      samples.foreach { s =>
+        if (isTrain(s.splitKey)) { trainErr += backprop(layers, w, s, grad); nTrain += 1 }
+        else {
+          var e = 0.0
+          forward(layers, w, s.features).last.foreach { o => val d = o - s.label; e += d * d / 2 }
+          testErr += e; nTest += 1
+        }
+      }
+      assert(nTrain > 0 && nTest > 0, s"$sizes: fixture needs both train and test rows")
+      assert(got.nTrain == nTrain && got.nTest == nTest, s"$sizes: counts")
+      assert(bits(got.trainErr) == bits(trainErr), s"$sizes: train error ${got.trainErr} vs $trainErr")
+      assert(bits(got.testErr) == bits(testErr), s"$sizes: test error ${got.testErr} vs $testErr")
+      assert(got.grad.map(bits).toSeq == grad.map(bits).toSeq, s"$sizes: gradient")
+    }
   }
 }

@@ -80,4 +80,15 @@ class OrderedPairsSpec extends AnyFunSuite {
     assert(pairs.toSet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     pairs.foreach { case (a, b) => assert(a < b) }
   }
+
+  test("an id list above the cap is refused, not expanded quadratically") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.graft.OrderedPairs
+    assert(OrderedPairs.MaxElements >= 50, "cap below the callers' maxDf")
+    val over = new GenericArrayData(Array.tabulate[Any](OrderedPairs.MaxElements + 1)(_.toLong))
+    val e = intercept[IllegalArgumentException](OrderedPairs.compute(over))
+    assert(e.getMessage.contains(s"${OrderedPairs.MaxElements}-id cap"))
+    val small = new GenericArrayData(Array[Any](3L, 1L, 2L))
+    assert(OrderedPairs.compute(small).numElements() == 3)
+  }
 }
